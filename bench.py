@@ -9,8 +9,10 @@ result transfer.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import sys
 import time
 
@@ -168,6 +170,58 @@ def _loadavg() -> list[float | None]:
         return [None, None]
 
 
+def _spark_cpus() -> int:
+    """Effective Spark core count: session.py masters
+    local[$SPARK_GRAFT_CPUS], so that (not the host's count) is the
+    number an artifact carries and a reference must match."""
+    try:
+        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    except ValueError:
+        return 32
+
+
+def load_prior_medians(
+    root: str, sf: str, ncpus: int
+) -> tuple[dict[str, float], str | None]:
+    """Per-query medians of the newest committed ``BENCH_DETAIL_r*.json``
+    under ``root`` that can serve as this run's reference, and its path.
+
+    A reference must match the run's scale factor (a bigger sf would
+    false-trigger every query and burn the rerun cap) and its Spark
+    core count (a 32-core median makes every 4-core query look
+    inflated, and projects a 4-core wall far too short). It must also
+    be a healthy full run: a deadline-skipped or signal-terminated
+    artifact (r14's low-core scaling leg) was measured under duress
+    and poisons both the rerun bar and the wall projections. An
+    unreadable file is skipped, not fatal.
+    """
+
+    def round_no(path: str) -> int:
+        m = re.search(r"_r(\d+)", os.path.basename(path))
+        return int(m.group(1)) if m else -1
+
+    details = sorted(
+        glob.glob(os.path.join(root, "BENCH_DETAIL_r*.json")), key=round_no
+    )
+    for path in reversed(details):
+        try:
+            with open(path) as fh:
+                doc = json.load(fh)
+        except (OSError, ValueError):
+            continue
+        if str(doc.get("sf")) != str(sf) or doc.get("ncpus") != ncpus:
+            continue
+        if doc.get("n_deadline_skipped") or doc.get("terminated_by"):
+            continue
+        medians = {
+            qn: float(qd["median"])
+            for qn, qd in doc.get("per_query", {}).items()
+            if qd.get("median")
+        }
+        return medians, path
+    return {}, None
+
+
 def main() -> None:
     t_proc0 = time.monotonic()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -293,10 +347,7 @@ def main() -> None:
         # masters local[$SPARK_GRAFT_CPUS], so THAT is the number a
         # scaling-leg artifact must carry — the r13 c8 run reported the
         # host's 32 from os.cpu_count() while running on 8 cores.
-        try:
-            ncpus = max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-        except ValueError:
-            ncpus = 32
+        ncpus = _spark_cpus()
         total = round(
             sum(d["median"] for d in runs_detail.values()
                 if d["median"] is not None), 3)
@@ -415,9 +466,6 @@ def main() -> None:
             # per-round copy (r9 ask #8); subset runs never clobber the
             # round's full-suite detail artifact
             try:
-                import glob
-                import re
-
                 rounds = [
                     int(m.group(1))
                     for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
@@ -624,38 +672,8 @@ def main() -> None:
     # genuinely slower tree pays a bounded rerun tax, never a doubled
     # run — and a real regression survives the rerun and stays in the
     # artifact with its counter-evidence attached.
-    prior_medians: dict[str, float] = {}
-    try:
-        import glob as _glob
-        import re as _re
-
-        _here = os.path.dirname(os.path.abspath(__file__))
-        _details = sorted(
-            _glob.glob(os.path.join(_here, "BENCH_DETAIL_r*.json")),
-            key=lambda p: int(_re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-        )
-        for _p in reversed(_details):
-            with open(_p) as fh:
-                _doc = json.load(fh)
-            # reference only valid at the SAME scale factor — a bigger
-            # sf would false-trigger every query and burn the rerun cap
-            if str(_doc.get("sf")) != str(sf):
-                continue
-            # skip deadline-stressed artifacts (r14): the newest
-            # committed detail can be the driver's LOW-CORE scaling
-            # leg (skipped tail, rep-throttled, inflated medians) — a
-            # reference taken under duress poisons both the rerun bar
-            # and the wall projections (observed: reps dropped to 1
-            # from query 1 with the r13 c8 artifact as reference).
-            # Fall through to the newest healthy full run instead.
-            if _doc.get("n_deadline_skipped") or _doc.get("terminated_by"):
-                continue
-            for qn, qd in _doc.get("per_query", {}).items():
-                if qd.get("median"):
-                    prior_medians[qn] = float(qd["median"])
-            break
-    except Exception:  # noqa: BLE001 — reference is best-effort
-        prior_medians = {}
+    prior_medians, prior_ref = load_prior_medians(here, sf, _spark_cpus())
+    print(f"[bench] prior-median reference: {prior_ref}", file=sys.stderr)
     prior_reruns_left = 40
 
     def _prior_bad(name, runs):

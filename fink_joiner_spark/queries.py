@@ -165,10 +165,9 @@ def register(name: str, oracle: str | None, note: str = "") -> Callable[[QueryFn
 # Names that received a green driver CORRECTNESS row in round 1 (the
 # driver verifies only the FIRST 50 entries of ``queries()``).  Round 2
 # rotates the verification window: never-verified queries are emitted
-# first so they get rows this round, previously-verified core-pipeline
-# queries come next, and ``_R1_ROTATE_OUT`` — trivial projections and
-# generic SQL extensions whose r1 rows stand — are deferred past the
-# cap.  The r1+r2 union covers every registered query.
+# first so they get rows this round, and previously-verified
+# core-pipeline queries come next.  The r1+r2 union covers every
+# registered query.
 _R1_VERIFIED = frozenset({
     "a1_dedup_latest_per_key", "a1_dedup_window_form", "a2_group_max",
     "p5_tuple_in_subquery", "j2_inner_join", "flagship_dedup_left_join",
@@ -188,23 +187,6 @@ _R1_VERIFIED = frozenset({
     "stream_stream_interval_join", "dedup_exact", "dedup_ngram_jaccard",
     "dedup_minhash_lsh", "dedup_simhash",
 })
-
-# r1-green queries deferred past the 50-entry driver cap this round:
-# alternate forms of already-kept operators (a1 window form, j3 left/
-# tolerance variants, t5 sliding/session) and generic SQL extensions —
-# the cheapest-to-re-verify, least-novel slice of the r1 set.  pytest
-# (tests/test_queries_oracle.py) still oracles ALL of them every run.
-_R1_ROTATE_OUT = frozenset({
-    "a1_dedup_window_form", "p5_tuple_in_subquery", "p6_select_star_view",
-    "p7_rename_columns", "p8_upper_scalar", "s4_memory_fixture_pipeline",
-    "j3_asof_join_left", "j3_asof_join_tolerance", "t5_sliding_window",
-    "t5_session_window", "ext_topk_per_group", "ext_set_ops",
-    "ext_cube_count", "ext_pivot_counts", "ext_semi_anti_join",
-    "ext_rollup_totals", "ext_window_analytics", "ext_global_sort_topn",
-    "ext_tpch_q1_pricing", "ext_interval_join_banded",
-    "ext_udtf_lateral_shingles",
-})
-
 
 def _correctness_history(
     root: str | None = None,

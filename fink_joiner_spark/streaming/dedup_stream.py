@@ -40,11 +40,14 @@ driver-local-disk only.
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from fink_joiner_spark.operators.dedup import latest_per_key
 from fink_joiner_spark.versioned import VersionedStore
@@ -62,6 +65,15 @@ class SnapshotStore:
     latest COMMITTED version: snapshot isolation for free, and a crash
     anywhere before the commit-marker flip leaves the previous
     snapshot untouched (replay is plain retry, no repair).
+
+    The fixed Spark cost of a write is kept to what the data needs:
+    a write runs at most ``defaultParallelism`` tasks (one file per
+    bucket dir); each commit records the stored schema as a ``_schema``
+    manifest annotation (next to ``_last_batch``), so every snapshot
+    read passes it to ``spark.read.schema`` and launches no
+    schema-inference job (stores committed without it still infer);
+    and :meth:`replace` serves its changed buckets, its rewrite and
+    its returned deltas from one pinned evaluation of the diff.
 
     ``lease_ttl_s`` bounds how long a CRASHED driver process blocks a
     restarted one (a stopped-then-restarted query in the SAME process
@@ -157,48 +169,52 @@ class SnapshotStore:
             self.path, f"v{version:06d}", self._DATASET, f"_bucket={bucket}"
         )
 
-    def bucket_dirs(self, buckets: Sequence[int | str] | None = None) -> list[str]:
-        """Current data directories, optionally restricted to ``buckets``."""
-        st = self._state()
-        if st is None:
-            return []
-        want = None if buckets is None else {str(b) for b in buckets}
-        return [
-            self._bucket_dir(v, b)
-            for b, v in sorted(st["buckets"].items(), key=lambda kv: int(kv[0]))
-            if want is None or b in want
-        ]
+    def _read_dirs(
+        self, spark: SparkSession, dirs: Sequence[str], schema: StructType | None
+    ) -> DataFrame | None:
+        """Read bucket dirs directly (no basePath): the original column
+        set and order, sans the _bucket partition column. A recorded
+        schema skips parquet schema inference, a one-task Spark job per
+        read; stores committed before ``_schema`` existed infer."""
+        if not dirs:
+            return None
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*dirs)
+
+    def _schema(self, version: int | None) -> StructType | None:
+        raw = self._store().annotation("_schema", version)
+        return None if raw is None else StructType.fromJson(json.loads(raw))
 
     def read(self, spark: SparkSession, buckets: Sequence[int | str] | None = None
              ) -> DataFrame | None:
-        dirs = self.bucket_dirs(buckets)
-        if not dirs:
+        cur = self._store(spark).current()
+        if cur is None:
             return None
-        # read the bucket dirs directly (no basePath): the original
-        # column set and order, sans the _bucket partition column
-        return spark.read.parquet(*dirs)
+        return self._read_version(spark, cur, buckets)
 
     def read_previous(self, spark: SparkSession) -> DataFrame | None:
         """The snapshot as of the PREVIOUS commit (one upsert back) —
         its referenced directories are retained by keep-2 GC."""
-        store = self._store(spark)
-        vs = store.committed_versions()
+        vs = self._store(spark).committed_versions()
         if len(vs) < 2:
             return None
-        prev = vs[-2]
-        dirs = [
-            self._bucket_dir(refs[-1], part.split("=", 1)[1])
-            for part, refs in sorted(store.parts(self._DATASET, prev).items())
-        ]
-        return spark.read.parquet(*dirs) if dirs else None
+        return self._read_version(spark, vs[-2])
 
-    def _read_version(self, spark: SparkSession, version: int) -> DataFrame | None:
-        store = self._store(spark)
+    def _read_version(
+        self, spark: SparkSession, version: int,
+        buckets: Sequence[int | str] | None = None,
+    ) -> DataFrame | None:
+        want = None if buckets is None else {str(b) for b in buckets}
+        refs = {
+            part.split("=", 1)[1]: vs[-1]
+            for part, vs in self._store(spark).parts(self._DATASET, version).items()
+        }
         dirs = [
-            self._bucket_dir(refs[-1], part.split("=", 1)[1])
-            for part, refs in sorted(store.parts(self._DATASET, version).items())
+            self._bucket_dir(v, b)
+            for b, v in sorted(refs.items(), key=lambda kv: int(kv[0]))
+            if want is None or b in want
         ]
-        return spark.read.parquet(*dirs) if dirs else None
+        return self._read_dirs(spark, dirs, self._schema(version))
 
     def diff(
         self,
@@ -226,8 +242,6 @@ class SnapshotStore:
         between versions, a bucket-pruned variant diffs only the
         buckets whose version advanced.
         """
-        from pyspark.sql import functions as F
-
         if from_version is None and to_version is None:
             cur, prev = self.read(spark), self.read_previous(spark)
         else:
@@ -251,29 +265,45 @@ class SnapshotStore:
             prev = self._read_version(spark, from_v)
         if cur is None or prev is None:
             return None
-        inserts = cur.exceptAll(prev).withColumn("is_retract", F.lit(False))
-        retracts = prev.exceptAll(cur).withColumn("is_retract", F.lit(True))
-        return inserts.unionByName(retracts)
+        return _tagged_delta(cur, prev)
 
     # -- writing ------------------------------------------------------------
 
     def _commit_rows(
         self, store: VersionedStore, v: int, touched: Sequence[int | str],
-        batch_id: int | None,
+        batch_id: int | None, schema: StructType,
     ) -> list[tuple[str, str, int]]:
         """Manifest for version ``v``: carry every untouched bucket's
         reference forward, reference the freshly written bucket dirs (a
         bucket every row of which disappeared drops out naturally), and
-        record the applied batch id as an annotation row."""
+        record the stored schema and the applied batch id as annotation
+        rows."""
         touched_parts = {f"_bucket={b}" for b in touched}
         rows = store.carry_except(store.state_rows(), self._DATASET, touched_parts)
-        rows = [r for r in rows if r[0] != "_last_batch"]
+        rows = [r for r in rows if r[0] not in ("_last_batch", "_schema")]
         rows += [
             (self._DATASET, p, v) for p in store.written_parts(v, self._DATASET)
         ]
+        rows.append(("_schema", schema.json(), v))
         if batch_id is not None:
             rows.append(("_last_batch", str(batch_id), v))
         return rows
+
+    def _write_buckets(self, df: DataFrame, store: VersionedStore, v: int,
+                       n_buckets: int) -> None:
+        """Stage ``df`` (carrying its ``_bucket`` column) under version
+        ``v``, one file per bucket dir. Hash-repartitioning on the
+        bucket keeps each bucket in one task; the task count is capped
+        at the core count, since every write task pays a fixed cost
+        (deserializing its Hadoop configuration) that dwarfs a small
+        bucket's rows."""
+        fan_out = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
+        (
+            df.repartition(max(1, fan_out), "_bucket")
+            .write.partitionBy("_bucket")
+            .mode("overwrite")
+            .parquet(f"{store.vdir(v)}/{self._DATASET}")
+        )
 
     def upsert(
         self,
@@ -284,7 +314,10 @@ class SnapshotStore:
         """Merge a micro-batch; return (inserts, retracts) — the retract
         stream delta. Idempotent: re-applying the same batch yields an
         empty delta. Reads, merges, diffs, and rewrites ONLY the key-hash
-        buckets present in the batch — O(touched), not O(snapshot).
+        buckets present in the batch — O(touched), not O(snapshot). The
+        touched buckets come straight from the batch's keys (dedup
+        cannot change which buckets a batch touches); the rewrite runs
+        at most ``defaultParallelism`` write tasks, one file per bucket.
 
         Exactly-once contract (S9/T6): the commit-marker flip is the
         commit point. ``on_delta(inserts, retracts)`` — e.g. a durable
@@ -296,8 +329,6 @@ class SnapshotStore:
         is a no-op that leaves the already-durable delta untouched (the
         Delta-Lake txn-app-id idempotent-sink pattern).
         """
-        from pyspark.sql import functions as F
-
         spark = batch_df.sparkSession
         store = self._writer(spark)
         st = self._state()
@@ -308,12 +339,9 @@ class SnapshotStore:
         ):  # batch fully committed before a crash: replay is a no-op
             empty = batch_df.limit(0)
             return empty, empty
-        batch_latest = latest_per_key(
-            batch_df, self.keys, self.order_col, self.tie_breakers
-        )
         touched = sorted(
             r[0]
-            for r in batch_latest.select(
+            for r in batch_df.select(
                 self._bucket_expr().alias("_b")
             ).distinct().collect()
         )
@@ -322,6 +350,9 @@ class SnapshotStore:
             if on_delta is not None:
                 on_delta(empty, empty)
             return empty, empty
+        batch_latest = latest_per_key(
+            batch_df, self.keys, self.order_col, self.tie_breakers
+        )
         old = self.read(spark, buckets=touched)
         if old is None:
             new = batch_latest
@@ -330,17 +361,13 @@ class SnapshotStore:
                 old.unionByName(batch_latest), self.keys, self.order_col, self.tie_breakers
             )
         with store.transaction() as v:
-            (
-                new.withColumn("_bucket", self._bucket_expr())
-                .repartition(max(1, min(len(touched), 32)), "_bucket")
-                .write.partitionBy("_bucket")
-                .mode("overwrite")
-                .parquet(f"{store.vdir(v)}/{self._DATASET}")
+            self._write_buckets(
+                new.withColumn("_bucket", self._bucket_expr()), store, v, len(touched)
             )
             # re-read the staged bucket dirs (sans partition column):
             # stable lineage for the diff
-            new = spark.read.parquet(
-                *[self._bucket_dir(v, b) for b in touched]
+            new = self._read_dirs(
+                spark, [self._bucket_dir(v, b) for b in touched], new.schema
             )
             if old is None:
                 inserts, retracts = new, new.limit(0)
@@ -349,7 +376,7 @@ class SnapshotStore:
                 retracts = old.exceptAll(new)
             if on_delta is not None:  # durable delta BEFORE the commit point
                 on_delta(inserts, retracts)
-            store.commit(v, self._commit_rows(store, v, touched, batch_id))
+            store.commit(v, self._commit_rows(store, v, touched, batch_id, new.schema))
         return inserts, retracts
 
     def replace(self, new: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -360,41 +387,50 @@ class SnapshotStore:
         touched buckets from the batch), a full replace must diff
         everything — but the REWRITE is still bucket-pruned: only
         key-hash buckets that actually changed are written to the new
-        version; unchanged buckets carry their references forward.
+        version (at most ``defaultParallelism`` write tasks, one file
+        per bucket); unchanged buckets carry their references forward.
         (Compute is O(new+old) — inherent to re-deriving a full join
         result; on a production cluster this store is a Delta/Iceberg
-        table and the delta comes from MERGE instead.)"""
-        from pyspark.sql import functions as F
+        table and the delta comes from MERGE instead.)
 
+        Both ``new`` and the +/- delta are pinned with
+        ``localCheckpoint``: the two ``exceptAll`` diffs run once, and
+        that one evaluation serves the changed-bucket set, the bucket
+        rewrite and the returned frames, so writing ``inserts`` and
+        ``retracts`` downstream (a changelog) runs no further shuffle."""
         spark = new.sparkSession
         store = self._writer(spark)
-        # pin the computed relation: one evaluation serves diff + write
         new = new.localCheckpoint(eager=True)
         bexpr = self._bucket_expr()
         old = self.read(spark)
-        if old is None:
+        if old is None:  # every row is an insert
+            delta = new
             inserts, retracts = new, new.limit(0)
         else:
-            inserts, retracts = new.exceptAll(old), old.exceptAll(new)
+            delta = _tagged_delta(new, old).localCheckpoint(eager=True)
+            inserts = delta.where(~F.col("is_retract")).drop("is_retract")
+            retracts = delta.where(F.col("is_retract")).drop("is_retract")
         changed = sorted(
-            r[0]
-            for r in inserts.select(bexpr.alias("_b"))
-            .unionByName(retracts.select(bexpr.alias("_b")))
-            .distinct()
-            .collect()
+            r[0] for r in delta.select(bexpr.alias("_b")).distinct().collect()
         )
         if changed:
             with store.transaction() as v:
-                (
+                self._write_buckets(
                     new.withColumn("_bucket", bexpr)
-                    .where(F.col("_bucket").isin([int(b) for b in changed]))
-                    .repartition(max(1, min(len(changed), 32)), "_bucket")
-                    .write.partitionBy("_bucket")
-                    .mode("overwrite")
-                    .parquet(f"{store.vdir(v)}/{self._DATASET}")
+                    .where(F.col("_bucket").isin([int(b) for b in changed])),
+                    store, v, len(changed),
                 )
-                store.commit(v, self._commit_rows(store, v, changed, None))
+                store.commit(v, self._commit_rows(store, v, changed, None, new.schema))
         return inserts, retracts
+
+
+def _tagged_delta(cur: DataFrame, prev: DataFrame) -> DataFrame:
+    """Multiset diff ``cur`` vs ``prev`` in changelog form: rows only in
+    ``cur`` with ``is_retract`` false, rows only in ``prev`` with it
+    true."""
+    inserts = cur.exceptAll(prev).withColumn("is_retract", F.lit(False))
+    retracts = prev.exceptAll(cur).withColumn("is_retract", F.lit(True))
+    return inserts.unionByName(retracts)
 
 
 def run_dedup_stream(
@@ -415,7 +451,6 @@ def run_dedup_stream(
     a continuous deployment passes e.g. ``{"processingTime": "10
     seconds"}`` and the query runs until stopped.
     """
-    from pyspark.sql import functions as F
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         def write_changelog(inserts: DataFrame, retracts: DataFrame) -> None:

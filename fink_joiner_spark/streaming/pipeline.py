@@ -21,6 +21,7 @@ import os
 from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from fink_joiner_spark.streaming.dedup_stream import SnapshotStore
 
@@ -90,9 +91,9 @@ def run_snapshot_join_pipeline(
     # For the join result we want full-row diff semantics, not
     # latest-per-key — store the rows verbatim and diff (bucket-pruned
     # rewrite through the shared versioned-store commit protocol).
+    # replace() pins the diff, so the changelog write below re-reads
+    # it instead of running both exceptAlls again.
     inserts, retracts = result_store.replace(joined)
-    from pyspark.sql import functions as F
-
     delta = inserts.withColumn("is_retract", F.lit(False)).unionByName(
         retracts.withColumn("is_retract", F.lit(True))
     )

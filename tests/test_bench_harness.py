@@ -90,3 +90,34 @@ def test_sigterm_midsuite_yields_parseable_artifact(tmp_path):
         doc = json.load(fh)
     assert doc.get("terminated_by") == "sigterm"
     assert set(doc["per_query"]) == set(summary["queries"])
+
+
+def _write_detail(root, name, **doc):
+    with open(os.path.join(root, name), "w") as fh:
+        json.dump(doc, fh)
+
+
+def test_prior_medians_match_scale_factor_and_core_count(tmp_path):
+    """The rerun bar and wall projections read per-query medians from
+    the newest committed detail artifact, which must have been
+    measured at the run's sf AND core count: a newer 32-core artifact
+    must not seed a 4-core run's reference, and an unreadable or
+    deadline-skipped one is passed over."""
+    from bench import load_prior_medians
+
+    root = str(tmp_path)
+    _write_detail(root, "BENCH_DETAIL_r3.json", sf=0.1, ncpus=4,
+                  per_query={"q1": {"median": 1.5}, "q2": {"median": None}})
+    _write_detail(root, "BENCH_DETAIL_r10.json", sf=0.1, ncpus=32,
+                  per_query={"q1": {"median": 0.2}})
+    assert load_prior_medians(root, "0.1", 4) == (
+        {"q1": 1.5}, os.path.join(root, "BENCH_DETAIL_r3.json"))
+    assert load_prior_medians(root, "0.1", 32)[0] == {"q1": 0.2}
+    assert load_prior_medians(root, "0.1", 8) == ({}, None)
+    assert load_prior_medians(root, "0.01", 4) == ({}, None)
+
+    _write_detail(root, "BENCH_DETAIL_r11.json", sf=0.1, ncpus=4,
+                  n_deadline_skipped=3, per_query={"q1": {"median": 9.0}})
+    with open(os.path.join(root, "BENCH_DETAIL_r12.json"), "w") as fh:
+        fh.write("{truncated")
+    assert load_prior_medians(root, "0.1", 4)[0] == {"q1": 1.5}

@@ -8,6 +8,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import functions as F
@@ -507,3 +508,133 @@ def test_cdf_diff_guards_single_version_and_unknown_versions(spark, tmp_path):
     # and the valid explicit pair still works
     d = store.diff(spark, from_version=v1, to_version=v1 + 1)
     assert sorted(tuple(r) for r in d.collect()) == [(2, 20, "b1", False)]
+
+
+@contextlib.contextmanager
+def _job_group(spark, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _group_jobs(spark, group):
+    tracker = spark.sparkContext.statusTracker()
+    return sorted(tracker.getJobIdsForGroup(group))
+
+
+def test_snapshot_reads_launch_no_spark_job(spark, tmp_path):
+    """Each commit records the stored schema as a ``_schema`` manifest
+    annotation, so reading a committed snapshot (current, previous, or
+    any retained version) is pure planning: no schema-inference job."""
+    schema = "k long, ts long, v string"
+    store = SnapshotStore(str(tmp_path / "snap"), ["k"], "ts", n_buckets=8)
+    store.upsert(spark.createDataFrame([(k, 10, f"v{k}") for k in range(64)], schema))
+    store.upsert(spark.createDataFrame([(3, 20, "w3")], schema))
+
+    with _job_group(spark, "snapshot-read"):
+        cur, prev, d = store.read(spark), store.read_previous(spark), store.diff(spark)
+    assert _group_jobs(spark, "snapshot-read") == []
+    assert cur.schema.simpleString() == "struct<k:bigint,ts:bigint,v:string>"
+    assert cur.count() == prev.count() == 64
+    assert sorted(tuple(r) for r in d.collect()) == [(3, 10, "v3", True), (3, 20, "w3", False)]
+
+
+def test_upsert_write_fan_out_capped_at_core_count(spark, tmp_path, monkeypatch):
+    """A batch touching every bucket of a store with twice as many
+    buckets as cores writes with at most ``defaultParallelism`` tasks,
+    and still lands each bucket in exactly one file."""
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    n_buckets = 2 * cores
+    store = SnapshotStore(str(tmp_path / "snap"), ["k"], "ts", n_buckets=n_buckets)
+    write = SnapshotStore._write_buckets
+
+    def grouped_write(self, *args, **kwargs):
+        with _job_group(spark, "bucket-write"):
+            return write(self, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotStore, "_write_buckets", grouped_write)
+    batch = spark.createDataFrame(
+        [(k, 10, f"v{k}") for k in range(16 * n_buckets)], "k long, ts long, v string"
+    )
+    store.upsert(batch)
+
+    tracker = sc.statusTracker()
+    last_job = _group_jobs(spark, "bucket-write")[-1]
+    result_stage = tracker.getStageInfo(max(tracker.getJobInfo(last_job).stageIds))
+    assert result_stage.numTasks <= cores
+    buckets = store._state()["buckets"]
+    assert len(buckets) == n_buckets
+    for b, v in buckets.items():
+        files = [f for f in os.listdir(store._bucket_dir(int(v), b)) if f.endswith(".parquet")]
+        assert len(files) == 1
+    assert store.read(spark).count() == batch.count()
+
+
+def test_replace_delta_is_pinned_once(spark, tmp_path):
+    """``replace`` serves (inserts, retracts) from one pinned evaluation
+    of the diff: writing their union as a changelog runs no shuffle."""
+    from fink_joiner_spark.plans import count_shuffles
+
+    sc = spark.sparkContext
+    schema = "k long, ts long, v string"
+    store = SnapshotStore(str(tmp_path / "result"), ["k"], "k", n_buckets=8)
+    store.replace(spark.createDataFrame([(k, 10, f"v{k}") for k in range(32)], schema))
+    ins, rets = store.replace(spark.createDataFrame(
+        [(k, 11 if k % 4 == 0 else 10, f"v{k}") for k in range(1, 33)], schema
+    ))
+    delta = ins.withColumn("is_retract", F.lit(False)).unionByName(
+        rets.withColumn("is_retract", F.lit(True))
+    )
+    assert count_shuffles(delta) == 0
+
+    with _job_group(spark, "changelog-write"):
+        delta.write.mode("overwrite").parquet(str(tmp_path / "changelog"))
+    tracker = sc.statusTracker()
+    jobs = _group_jobs(spark, "changelog-write")
+    assert jobs and all(len(tracker.getJobInfo(j).stageIds) == 1 for j in jobs)
+
+    got = sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / "changelog")).collect())
+    want = sorted(
+        [(k, 10, f"v{k}", True) for k in (0, 4, 8, 12, 16, 20, 24, 28)]
+        + [(k, 11, f"v{k}", False) for k in (4, 8, 12, 16, 20, 24, 28, 32)]
+    )
+    assert got == want
+    assert sorted(tuple(r) for r in store.read(spark).collect()) == sorted(
+        (k, 11 if k % 4 == 0 else 10, f"v{k}") for k in range(1, 33)
+    )
+
+
+def test_store_without_schema_annotation_still_reads(spark, tmp_path):
+    """A store committed before the ``_schema`` annotation existed (no
+    such manifest row) reads back through schema inference, and its
+    next upsert records the annotation."""
+    from fink_joiner_spark.versioned import VersionedStore
+
+    path = str(tmp_path / "snap")
+    rows = [(k, 10, f"v{k}") for k in range(20)]
+    df = spark.createDataFrame(rows, "k long, ts long, v string")
+    vstore = VersionedStore(spark, path)
+    with vstore.transaction() as v:
+        (
+            df.withColumn("_bucket", F.pmod(F.hash("k"), F.lit(4)))
+            .write.partitionBy("_bucket")
+            .parquet(f"{vstore.vdir(v)}/snap")
+        )
+        vstore.commit(v, [("snap", p, v) for p in vstore.written_parts(v, "snap")])
+
+    store = SnapshotStore(path, ["k"], "ts", n_buckets=4)
+    assert store._store(spark).annotation("_schema") is None
+    assert sorted(tuple(r) for r in store.read(spark).collect()) == rows
+
+    ins, rets = store.upsert(spark.createDataFrame([(7, 20, "w7")], "k long, ts long, v string"))
+    assert [tuple(r) for r in ins.collect()] == [(7, 20, "w7")]
+    assert [tuple(r) for r in rets.collect()] == [(7, 10, "v7")]
+    assert store._store(spark).annotation("_schema") is not None
+    assert sorted(tuple(r) for r in store.read(spark).collect()) == sorted(
+        [r for r in rows if r[0] != 7] + [(7, 20, "w7")]
+    )
