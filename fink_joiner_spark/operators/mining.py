@@ -52,8 +52,7 @@ def frequent_pairs(
     items = _pin_once(
         df.select(
             F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
-        ).distinct(),
-        tag="frequent_pairs",
+        ).distinct()
     )
     freq = (
         items.groupBy("item")

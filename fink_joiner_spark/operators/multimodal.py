@@ -681,7 +681,7 @@ def phash_dup_pairs(
     # two longs) pinned blocks instead.
     from fink_joiner_spark.operators.similarity import _pin_once
 
-    blocks = _pin_once(blocks, tag="phash")
+    blocks = _pin_once(blocks)
     if max_block is not None:
         sizes = blocks.groupBy("blk", "val").agg(F.count(F.lit(1)).alias("_n"))
         if on_oversize in ("warn", "error"):
@@ -714,7 +714,7 @@ def phash_dup_pairs(
     # (r5); kept on A/B evidence (r13: 2.43 s with vs 2.70 without)
     from fink_joiner_spark.operators.similarity import _join_spread
 
-    blocks = _join_spread(blocks, "blk", "val", tag="phash_blocks")
+    blocks = _join_spread(blocks, "blk", "val")
     a, b = blocks.alias("a"), blocks.alias("b")
     cand = (
         a.join(

@@ -55,7 +55,7 @@ def _spread(df: DataFrame) -> DataFrame:
     return df if n >= par else df.repartition(par)
 
 
-def _join_spread(df: DataFrame, *keys: str, tag: str | None = None) -> DataFrame:
+def _join_spread(df: DataFrame, *keys: str) -> DataFrame:
     """EXPLICIT keyed repartition of a candidate-join input whose join
     OUTPUT explodes quadratically per key cell (posting self-joins,
     band-bucket collision joins). AQE's size-based coalescing sees only
@@ -93,31 +93,11 @@ def _join_spread(df: DataFrame, *keys: str, tag: str | None = None) -> DataFrame
     under ANY keyed repartition — the caps/compound-key/distinct-
     signature designs are the skew defense, this only pins partition
     COUNT against size-based coalescing."""
-    if _measure_skip("SPARK_GRAFT_SPREAD_SKIP", tag):
-        return df
     par = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(par, *[F.col(k) for k in keys])
 
 
-# test hook (ADVICE r13): when a test assigns a list here, _pin_once
-# records the PRE-PIN frame it was handed, so plan audits (column
-# pruning at the parquet scan) can run on the exact frame each
-# registered operator builds — the pinned result plan's leaf hides it.
-_PIN_AUDIT: list | None = None
-
-
-def _measure_skip(env: str, tag: str | None) -> bool:
-    """Paired-A/B site toggle (measurement tooling only, the r13
-    `_join_spread` removal discipline): ``env`` holds a comma list of
-    site tags whose pin/spread should be a no-op for this process.
-    Production and the driver never set these."""
-    if tag is None:
-        return False
-    skips = os.environ.get(env, "")
-    return tag in {s.strip() for s in skips.split(",") if s.strip()}
-
-
-def _pin_once(df: DataFrame, tag: str | None = None) -> DataFrame:
+def _pin_once(df: DataFrame) -> DataFrame:
     """Materialize a multiply-referenced intermediate exactly once
     instead of re-evaluating its subtree at every reference.
 
@@ -141,8 +121,7 @@ def _pin_once(df: DataFrame, tag: str | None = None) -> DataFrame:
     plan and makes the pinned frame irrecoverable). The CC loop's
     per-round localCheckpoint (graph.py) is NOT this helper — there
     plan TRUNCATION is the point (the plan would otherwise grow with
-    iteration count). ``SPARK_GRAFT_PIN_MODE=checkpoint`` preserves
-    the r13 mechanism for paired measurement.
+    iteration count).
 
     RELEASE CONTRACT (ADVICE r13): pinned storage is registered on
     :data:`graph._PENDING_FREE` and released by
@@ -156,14 +135,6 @@ def _pin_once(df: DataFrame, tag: str | None = None) -> DataFrame:
     covers those for free)."""
     from fink_joiner_spark.operators import graph
 
-    if _PIN_AUDIT is not None:
-        _PIN_AUDIT.append(df)
-    if _measure_skip("SPARK_GRAFT_PIN_SKIP", tag):
-        return df
-    if os.environ.get("SPARK_GRAFT_PIN_MODE", "persist") == "checkpoint":
-        out = df.localCheckpoint(eager=False)
-        graph._PENDING_FREE.append(graph._ckpt_handle(out))  # noqa: SLF001
-        return out
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
     # a persisted DataFrame exposes unpersist(blocking) just like the
     # JVM RDD handles graph._unpersist_handle drives — same registry,
@@ -250,7 +221,7 @@ def jaccard_pairs(
     if max_doc_freq is not None:
         # capped path references sh from the posting, the df aggregate
         # and both verify sides — shingle once, not per reference
-        sh = _pin_once(sh, tag="jaccard_capped")
+        sh = _pin_once(sh)
     # join on a 64-bit shingle hash, not the string: long keys shuffle
     # and compare ~an order of magnitude cheaper; an xxhash64 collision
     # (≈0 at any realistic posting volume) could only inflate one
@@ -263,8 +234,7 @@ def jaccard_pairs(
         # verify on the raw arrays (the capped posting join can no
         # longer COUNT the true intersection — hot shingles are gone)
         t_micro = round(threshold * 1_000_000)
-        posting = _join_spread(_cap_postings(posting, max_doc_freq), "s",
-                               tag="capped_postings")
+        posting = _join_spread(_cap_postings(posting, max_doc_freq), "s")
         a, b = posting.alias("a"), posting.alias("b")
         cand = (
             a.join(
@@ -314,7 +284,7 @@ def _verify_jaccard(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFra
     # of the candidate aggregate sees only shuffle bytes (see
     # _verify_containment)
     verified = (
-        _join_spread(cand, "id_a", tag="verify").join(av, "id_a")
+        _join_spread(cand, "id_a").join(av, "id_a")
         .join(bv, "id_b")
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
     )
@@ -456,8 +426,7 @@ def _minhash_banded(
         _spread(df).select(
             F.col(id_col).alias("id"),
             word_shingles(F.col(text_col), n).alias("shingles"),
-        ),
-        tag="minhash",
+        )
     )
     hashed = shingled.select(
         "id", F.explode("shingles").alias("s")
@@ -763,35 +732,6 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _dot_flat(a: Column, b: Column, dim: int) -> Column:
-    """Strict left-fold dot product unrolled over a KNOWN fixed
-    dimension: ``((0.0 + a0·b0) + a1·b1) + …`` — the exact evaluation
-    order of the HOF fold (:func:`dot_col`), so the result is
-    BIT-identical, built from GetArrayItem/Multiply/Add nodes.
-
-    NOT the production kernel: the r10 A/Bs measured the unrolled
-    chains 3-4× SLOWER end-to-end than the HOF fold (64-term chains
-    bloat every generated stage, and inlined into a join's doConsume
-    the full cosine exceeds Janino's 64 KB method limit — codegen
-    falls back to interpreted eval and pays a failed compile per
-    plan). Kept as the documented bit-identical alternate and the
-    pytest cross-check form; see :func:`dot_col` for the measured
-    ranking and the shipped shape (per-side norm hoist)."""
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + a[i].cast("double") * b[i].cast("double")
-    return acc
-
-
-def _sqnorm_flat(a: Column, dim: int) -> Column:
-    """Flat-unrolled Σaᵢ² with the fold's exact evaluation order."""
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        ai = a[i].cast("double")
-        acc = acc + ai * ai
-    return acc
-
-
 def norm_col(vec: Column) -> Column:
     """‖vec‖ with the strict fold's exact evaluation order (HOF form).
     Pair-stage operators project this ONCE PER VECTOR on each join
@@ -817,54 +757,30 @@ def dot_col(a: Column, b: Column) -> Column:
       own idle "run E" numbers, i.e. the 777 cpu-s figure was the
       shared-JVM profile-pollution artifact, not kernel cost (the
       bench's fresh-JVM outlier rerun now defends against it);
-    * flat unrolled ``a[0]·b[0] + …`` (``_dot_flat``): 3-4× SLOWER
-      end-to-end despite being codegen-resident — the 64-term chains
-      bloat every generated stage (and the full cosine inlined into a
-      join's doConsume exceeds Janino's 64 KB limit outright, falling
-      back to interpreted eval plus a failed compile per plan);
+    * flat unrolled ``a[0]·b[0] + …`` over the fixed dimension: 3-4×
+      SLOWER end-to-end despite being codegen-resident — the 64-term
+      chains bloat every generated stage (and the full cosine inlined
+      into a join's doConsume exceeds Janino's 64 KB limit outright,
+      falling back to interpreted eval plus a failed compile per plan);
     * k-scaled unrolls (IVF assignment as least(struct), sign-LSH
       bucket): always blow the 64 KB limit — 6.4 s vs 0.5 s for the
       same assignment at sf0.01.
 
     What actually moved the needle is the NORM hoist: one fold per
-    pair instead of three. Kept flat forms (``_dot_flat`` etc.) are
-    the documented bit-identical alternates + pytest cross-checks."""
+    pair instead of three."""
     ad = F.transform(a, lambda x: x.cast("double"))
     bd = F.transform(b, lambda x: x.cast("double"))
     return F.aggregate(F.zip_with(ad, bd, lambda x, y: x * y),
                        F.lit(0.0), lambda acc, x: acc + x)
 
 
-def vec_dim(df: DataFrame, col: str) -> int | None:
-    """The fixed embedding dimension of ``col``, probed from one row
-    (a LIMIT-1 job — negligible next to the operator it unlocks).
-    Returns None on an all-null/empty input; callers then fall back to
-    the dimension-agnostic fold form of :func:`cosine`. The engine's
-    embedding-table contract is a fixed-width vector column, so one
-    row's size is the corpus's size."""
-    rows = (
-        df.select(F.size(F.col(col)).alias("d"))
-        .where(F.col(col).isNotNull())
-        .head(1)
-    )
-    return int(rows[0]["d"]) if rows else None
-
-
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity with strict left-fold double accumulation —
     bit-identical to the DuckDB oracle's explicit fold.
 
     The production pair stages do NOT call this per pair — they hoist
     :func:`norm_col` per side and pay only :func:`dot_col` per pair
-    (bit-identical; see those docstrings for the r10 measurements).
-    With ``dim`` the three folds unroll into flat expressions
-    (:func:`_dot_flat`) — the documented alternate, measured slower;
-    the pytest suite asserts both forms agree bitwise with the
-    default HOF fold."""
-    if dim is not None:
-        return _dot_flat(a, b, dim) / (
-            F.sqrt(_sqnorm_flat(a, dim)) * F.sqrt(_sqnorm_flat(b, dim))
-        )
+    (bit-identical; see those docstrings for the r10 measurements)."""
     ad = F.transform(a, lambda x: x.cast("double"))
     bd = F.transform(b, lambda x: x.cast("double"))
     dot = F.aggregate(F.zip_with(ad, bd, lambda x, y: x * y),
@@ -2516,13 +2432,12 @@ def containment_pairs(
     if max_doc_freq is not None:
         # capped path references sh from the posting, the df aggregate
         # and both verify sides — shingle once, not per reference
-        sh = _pin_once(sh, tag="containment_capped")
+        sh = _pin_once(sh)
     posting = sh.select(
         "id", "n_sh", F.explode(F.transform("shingles", lambda s: F.xxhash64(s))).alias("s")
     )
     if max_doc_freq is not None:
-        posting = _join_spread(_cap_postings(posting, max_doc_freq), "s",
-                               tag="capped_postings")
+        posting = _join_spread(_cap_postings(posting, max_doc_freq), "s")
         a, b = posting.alias("a"), posting.alias("b")
         cand = (
             a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
@@ -2599,7 +2514,7 @@ def _verify_containment(
     # join inputs; r13 paired A/B: capped containment 7.01->4.55 s,
     # containment-prefix 9.08->4.09 s — see OPTIMIZATION_r13.md §7)
     verified = (
-        _join_spread(cand, "id_a", tag="verify").join(av, "id_a")
+        _join_spread(cand, "id_a").join(av, "id_a")
         .join(bv, "id_b")
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
         .where(F.col("inter") > 0)
@@ -2675,8 +2590,8 @@ def containment_pairs_prefix(
         index = _cap_postings(index, max_doc_freq)
     # exploding-join guard: pin the candidate join's partitioning
     # (AQE-coalesce-exempt) — see _join_spread
-    probe = _join_spread(probe, "s", tag="prefix_probe")
-    index = _join_spread(index, "s", tag="prefix_probe")
+    probe = _join_spread(probe, "s")
+    index = _join_spread(index, "s")
     cand = (
         probe.join(
             index,

@@ -472,7 +472,7 @@ def scrub_boilerplate(
     # tokenize + segment-slice subtree (similarity._pin_once)
     from fink_joiner_spark.operators.similarity import _pin_once
 
-    ex = _pin_once(ex, tag="scrub")
+    ex = _pin_once(ex)
 
     freq = (
         ex.where("is_full")
@@ -723,28 +723,12 @@ def duplicated_spans(
       digest — cheap, and cheaper than materializing. O(chars·min_len)
       digest work and a 32-hex-char shuffle key per position are the
       known costs (exactly what xx128 cuts).
-    * ``"rolling"`` — a double-modulus rolling polynomial (each char
-      hashed once, two ~30-bit residues packed into a ~60-bit long so
-      exactness survives the birthday bound that rules out winnowing's
-      single 30-bit modulus; occurrence count as a window over g so
-      the windowed-sum pipeline is evaluated once). The per-char value
-      is the full UTF-8 byte sequence as an int (injective — NOT
-      ``ascii()``, whose first-signed-byte value collides distinct
-      non-ASCII chars and goes negative; ADVICE r11), so the exactness
-      contract holds on any UTF-8 corpus, not only ASCII. TRIED AND REJECTED
-      for the registered query on measurement (round 11, sf0.1,
-      warm alternating A/B ×4): rolling 36.5/14.3/11.5/7.1 s vs md5
-      9.0/12.9/5.8/6.6 s in the same session, and the historical
-      md5+groupBy form benches 2.1-2.5 s healthy. The digest work md5
-      pays is NOT this operator's bottleneck — the rolling form trades
-      it for two per-doc window sorts (the windowed sum + the
-      count-over-g sort of every gram row), and sorts dominate
-      digests at stride 1. Winnowing's rolling win (2× there) comes
-      from its ~2/(w+1) SELECTION density shrinking everything
-      downstream — exact spans keep every position, so there is no
-      density win to pay for the sorts. Kept as a code path with a
-      pytest pinning rolling ≡ md5 so the measurement stays
-      reproducible.
+    A double-modulus rolling polynomial was measured and rejected here
+    (round 11, sf0.1, warm alternating A/B ×4: 7.1-36.5 s vs md5's
+    5.8-12.9 s): it trades the digest work for two per-doc window
+    sorts, and sorts dominate digests at stride 1. Winnowing's rolling
+    win comes from its ~2/(w+1) selection density, which exact spans
+    do not have.
 
     Emits ``(doc_id, span_start, span_len)``, 1-based start, one row
     per maximal duplicated span.
@@ -753,133 +737,50 @@ def duplicated_spans(
 
     from fink_joiner_spark.operators.similarity import _spread
 
-    spark = df.sparkSession
+    if hash_fn not in ("md5", "xx128"):
+        raise ValueError(f"hash_fn must be xx128|md5, got {hash_fn!r}")
     d = _spread(df).select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("t")
     ).where(F.length("t") >= min_len)
-    if hash_fn in ("md5", "xx128"):
-        base = d.select(
+    base = d.select(
+        "doc_id",
+        F.explode(
+            F.sequence(F.lit(1), F.length("t") - (min_len - 1))
+        ).alias("pos"),
+        "t",
+    )
+    if hash_fn == "md5":
+        grams = base.select(
             "doc_id",
-            F.explode(
-                F.sequence(F.lit(1), F.length("t") - (min_len - 1))
-            ).alias("pos"),
-            "t",
+            "pos",
+            F.md5(F.substring("t", F.col("pos"), F.lit(min_len))).alias("g"),
         )
-        if hash_fn == "md5":
-            grams = base.select(
-                "doc_id",
-                "pos",
-                F.md5(F.substring("t", F.col("pos"), F.lit(min_len))).alias("g"),
-            )
-        else:
-            # substring in its OWN projection so both hashes read one
-            # evaluation (CollapseProject keeps non-cheap exprs
-            # referenced more than once); chaining a literal into the
-            # second xxhash64 gives an independent-seed second 64 bits
-            grams = base.select(
-                "doc_id",
-                "pos",
-                F.substring("t", F.col("pos"), F.lit(min_len)).alias("_s"),
-            ).select(
-                "doc_id",
-                "pos",
-                F.xxhash64("_s").alias("g"),
-                F.xxhash64(F.lit(1), "_s").alias("g2"),
-            )
-    elif hash_fn == "rolling":
-        max_len = d.agg(F.max(F.length("t"))).first()[0]  # 1-row collect
-        if max_len is None:
-            return spark.createDataFrame(
-                [], "doc_id long, span_start long, span_len long"
-            )
-        # exact driver-computed power tables for BOTH moduli (the same
-        # windowed-sum unwind as winnowed_fingerprints_rolling: wc =
-        # c·invB^pos, g = (Σ wc)·B^{pos+L-1}; every intermediate < 2^63:
-        # window sum < L·M ≈ 2^35, (S%M)·vb < M² ≈ 1e18)
-        rows = []
-        vi1 = vb1 = vi2 = vb2 = 1
-        for k in range(max_len + min_len + 1):
-            rows.append((k, vi1, vb1, vi2, vb2))
-            vi1 = vi1 * WINNOW_INV_BASE % WINNOW_MOD
-            vb1 = vb1 * WINNOW_BASE % WINNOW_MOD
-            vi2 = vi2 * SPAN_INV_BASE2 % SPAN_MOD2
-            vb2 = vb2 * SPAN_BASE2 % SPAN_MOD2
-        pow_df = F.broadcast(
-            spark.createDataFrame(
-                rows, "k long, vi1 long, vb1 long, vi2 long, vb2 long"
-            )
-        )
-        # char -> int must be INJECTIVE for the exactness contract:
-        # ascii() returns only the first (signed) UTF-8 byte, so
-        # distinct non-ASCII chars sharing a lead byte would collide
-        # deterministically and negative residues would break the
-        # h1*SPAN_MOD2+h2 packing (ADVICE r11). Hash the char's full
-        # UTF-8 byte sequence as a big-endian int instead (conv of the
-        # hex — <= 2^32, non-negative, injective because UTF-8 is),
-        # then reduce per modulus before the power multiply so every
-        # product stays < M^2 ~ 1e18 < 2^63.
-        cval = F.conv(
-            F.hex(F.encode(F.substring("t", F.col("pos"), F.lit(1)), "UTF-8")),
-            16,
-            10,
-        ).cast("long")
-        chars = d.select(
+        keys = ["g"]
+    else:
+        # substring in its OWN projection so both hashes read one
+        # evaluation (CollapseProject keeps non-cheap exprs
+        # referenced more than once); chaining a literal into the
+        # second xxhash64 gives an independent-seed second 64 bits
+        grams = base.select(
             "doc_id",
-            F.explode(F.sequence(F.lit(1), F.length("t"))).alias("pos"),
-            "t",
-        ).select("doc_id", "pos", cval.alias("c"))
-        weighted = chars.join(
-            pow_df, chars.pos == pow_df.k
+            "pos",
+            F.substring("t", F.col("pos"), F.lit(min_len)).alias("_s"),
         ).select(
             "doc_id",
             "pos",
-            (F.col("c") % WINNOW_MOD * F.col("vi1") % WINNOW_MOD).alias("w1"),
-            (F.col("c") % SPAN_MOD2 * F.col("vi2") % SPAN_MOD2).alias("w2"),
+            F.xxhash64("_s").alias("g"),
+            F.xxhash64(F.lit(1), "_s").alias("g2"),
         )
-        wsum = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
-            0, min_len - 1
-        )
-        s = weighted.select(
-            "doc_id",
-            "pos",
-            (F.sum("w1").over(wsum) % WINNOW_MOD).alias("s1"),
-            (F.sum("w2").over(wsum) % SPAN_MOD2).alias("s2"),
-            F.count(F.lit(1)).over(wsum).alias("nw"),
-        ).where(F.col("nw") == min_len)
-        grams = s.join(
-            pow_df, s.pos + (min_len - 1) == pow_df.k
-        ).select(
-            "doc_id",
-            "pos",
-            (
-                (F.col("s1") * F.col("vb1") % WINNOW_MOD) * SPAN_MOD2
-                + F.col("s2") * F.col("vb2") % SPAN_MOD2
-            ).alias("g"),
-        )
-    else:
-        raise ValueError(f"hash_fn must be xx128|md5|rolling, got {hash_fn!r}")
-    if hash_fn in ("md5", "xx128"):
-        # groupBy + join-back: evaluates the grams subtree twice, but
-        # explode+digest recompute is cheap and the hash aggregate
-        # never sorts — the measured winner (see docstring). The dup
-        # set after the >=2 filter is small, so AQE broadcasts it; a
-        # mega-hot gram stays join-safe (no per-key collect anywhere).
-        keys = ["g"] if hash_fn == "md5" else ["g", "g2"]
-        occ = grams.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_occ"))
-        hits = grams.join(occ.where(F.col("n_occ") >= 2), keys).select(
-            "doc_id", "pos"
-        )
-    else:
-        # the rolling pipeline is expensive to recompute (per-doc
-        # window sort), so count occurrences as ONE window over g
-        # instead of re-deriving the subtree on the join side
-        # (groupBy+join form of THIS path measured 31.9 s vs 8.8 s)
-        wocc = Window.partitionBy("g")
-        hits = (
-            grams.withColumn("n_occ", F.count(F.lit(1)).over(wocc))
-            .where(F.col("n_occ") >= 2)
-            .select("doc_id", "pos")
-        )
+        keys = ["g", "g2"]
+    # groupBy + join-back: evaluates the grams subtree twice, but
+    # explode+digest recompute is cheap and the hash aggregate
+    # never sorts — the measured winner (see docstring). The dup
+    # set after the >=2 filter is small, so AQE broadcasts it; a
+    # mega-hot gram stays join-safe (no per-key collect anywhere).
+    occ = grams.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_occ"))
+    hits = grams.join(occ.where(F.col("n_occ") >= 2), keys).select(
+        "doc_id", "pos"
+    )
     w = Window.partitionBy("doc_id").orderBy("pos")
     brk = F.when(
         F.lag("pos").over(w).isNull() | (F.col("pos") - F.lag("pos").over(w) > 1), 1
@@ -969,11 +870,6 @@ def winnowed_fingerprints(
 WINNOW_MOD = 1_000_000_007
 WINNOW_BASE = 31
 WINNOW_INV_BASE = 129032259  # pow(31, WINNOW_MOD - 2, WINNOW_MOD)
-# second independent modulus/base for duplicated_spans' double-width
-# rolling fingerprint (exactness needs ~60 bits, not winnowing's 30)
-SPAN_MOD2 = 998_244_353
-SPAN_BASE2 = 131
-SPAN_INV_BASE2 = 922042494  # pow(131, SPAN_MOD2 - 2, SPAN_MOD2)
 # packed selection key: g·2^31 + pos (g < MOD < 2^31 never true —
 # MOD ≈ 2^30, so g < 2^30 and the key < 2^61; pos bound 2^31 chars)
 _WINNOW_POS_PACK = 1 << 31

@@ -107,26 +107,19 @@ def stream_state_confs(spark: SparkSession, partitions: str):
     per demo; checkpoints here are always fresh (tempdirs), so a
     checkpoint-format difference can never clash with an existing
     checkpoint's format.
-
-    The env overrides (``SPARK_GRAFT_STREAM_CHANGELOG`` /
-    ``SPARK_GRAFT_STREAM_TRACKROWS``, "0"/"1") exist for paired A/B
-    measurement through the bench harness — the defaults below are the
-    measured winners and are what ships.
     """
-    changelog = os.environ.get("SPARK_GRAFT_STREAM_CHANGELOG", "0") != "0"
-    trackrows = os.environ.get("SPARK_GRAFT_STREAM_TRACKROWS", "0") != "0"
     with scoped_conf(spark, "spark.sql.shuffle.partitions", partitions), \
             scoped_conf(
                 spark,
                 "spark.sql.streaming.stateStore.rocksdb."
                 "changelogCheckpointing.enabled",
-                "true" if changelog else "false",
+                "false",
             ), \
             scoped_conf(
                 spark,
                 "spark.sql.streaming.stateStore.rocksdb."
                 "trackTotalNumberOfRows",
-                "true" if trackrows else "false",
+                "false",
             ):
         yield
 

@@ -2482,7 +2482,7 @@ def ext_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keep_canonical docs side AND the final source join — each
     # reference re-ran the tokenize-filter + exact-dedup subtree
     # before r13 (similarity._pin_once)
-    survivors = similarity._pin_once(quality.join(keep, "doc_id"), tag="curation_survivors")
+    survivors = similarity._pin_once(quality.join(keep, "doc_id"))
     pairs = similarity.minhash_lsh_pairs(
         survivors, "doc_id", "text", n=3, k=16, bands=4, threshold=0.8
     )

@@ -23,7 +23,7 @@ from collections.abc import Callable, Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fink_joiner_spark.streaming.dedup_stream import SnapshotStore
+from fink_joiner_spark.streaming.dedup_stream import SnapshotStore, run_dedup_stream
 
 
 class StreamDef:
@@ -65,17 +65,7 @@ def run_snapshot_join_pipeline(
             os.path.join(work_dir, s.name), s.keys, s.order_col, s.tie_breakers
         )
         stores[s.name] = store
-
-        def process(batch_df: DataFrame, batch_id: int, _store=store) -> None:
-            _store.upsert(batch_df, batch_id=batch_id)
-
-        q = (
-            s.stream_df.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(work_dir, s.name, "_checkpoint"))
-            .start()
-        )
-        queries.append(q)
+        queries.append(run_dedup_stream(s.stream_df, store))
     for q in queries:
         q.awaitTermination()
 

@@ -300,31 +300,6 @@ def test_duplicated_spans_maximal_merge_and_intra_doc(spark):
     }
 
 
-def test_duplicated_spans_rolling_equals_md5(spark, sf_dir):
-    """The double-modulus rolling fingerprint (the measured-and-
-    rejected alternate — kept so the A/B in the docstring stays
-    reproducible) must produce the EXACT same spans as the 128-bit
-    md5 path on the real corpus — exactness is the operator's
-    contract, so neither hash family may change the answer."""
-    from fink_joiner_spark.catalog import table
-    from fink_joiner_spark.operators import text as text_ops
-
-    docs = table(spark, sf_dir, "documents")
-    roll = {
-        tuple(r)
-        for r in text_ops.duplicated_spans(
-            docs, "doc_id", "text", min_len=40, hash_fn="rolling"
-        ).collect()
-    }
-    md5 = {
-        tuple(r)
-        for r in text_ops.duplicated_spans(
-            docs, "doc_id", "text", min_len=40, hash_fn="md5"
-        ).collect()
-    }
-    assert roll == md5 and roll
-
-
 def test_duplicated_spans_xx128_equals_md5(spark, sf_dir):
     """r13: the default path switched md5 -> chained-xxhash64 (two
     long fingerprint columns, 128 combined bits) purely for shuffle-
@@ -505,14 +480,13 @@ def test_canonical_url_edge_cases(spark):
 
 
 def test_duplicated_spans_rolling_injective_on_non_ascii(spark):
-    """ADVICE r11: ascii() hashes only the first (signed) UTF-8 byte,
-    so distinct accented chars sharing the 0xC3 lead byte used to
-    collide deterministically and fabricate duplicate spans the md5
-    path never emits. The rolling path now hashes the full UTF-8 byte
-    sequence (injective) — rolling must equal md5 on a corpus built
-    ENTIRELY from lead-byte-sharing chars: two unrelated docs (no
-    shared 40-gram => no spans) plus a pair sharing a 45-char
-    substring (=> identical spans from both hash families)."""
+    """The shipped xx128 path must equal md5 on a corpus built
+    ENTIRELY from multi-byte UTF-8 chars that share one lead byte (a
+    hash over only the first byte would collide them all and
+    fabricate spans): two unrelated docs (no shared 40-gram => no
+    spans) plus a pair sharing a 45-char substring (=> identical spans
+    from both hash families). The name dates from the removed rolling
+    hash path, which this corpus was first built to check."""
     from fink_joiner_spark.operators import text as text_ops
 
     import random
@@ -533,10 +507,10 @@ def test_duplicated_spans_rolling_injective_on_non_ascii(spark):
         ],
         "doc_id long, text string",
     )
-    roll = {
+    xx = {
         tuple(r)
         for r in text_ops.duplicated_spans(
-            docs, "doc_id", "text", min_len=40, hash_fn="rolling"
+            docs, "doc_id", "text", min_len=40
         ).collect()
     }
     md5 = {
@@ -545,5 +519,5 @@ def test_duplicated_spans_rolling_injective_on_non_ascii(spark):
             docs, "doc_id", "text", min_len=40, hash_fn="md5"
         ).collect()
     }
-    assert roll == md5
-    assert {d for d, _, _ in roll} == {3, 4}  # the planted pair, only
+    assert xx == md5
+    assert {d for d, _, _ in xx} == {3, 4}  # the planted pair, only

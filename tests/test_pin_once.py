@@ -39,19 +39,6 @@ def test_pin_once_preserves_rows_and_registers_release(spark):
     assert not (pinned.storageLevel.useMemory or pinned.storageLevel.useDisk)
 
 
-def test_pin_once_checkpoint_mode_truncates(spark, monkeypatch):
-    """SPARK_GRAFT_PIN_MODE=checkpoint preserves the r13 mechanism
-    (lazy localCheckpoint, lineage truncated) for paired A/Bs."""
-    monkeypatch.setenv("SPARK_GRAFT_PIN_MODE", "checkpoint")
-    df = spark.range(0, 100).select(F.col("id"), (F.col("id") % 3).alias("k"))
-    pinned = similarity._pin_once(df)
-    assert pinned.count() == 100
-    from fink_joiner_spark import plans
-
-    assert "ExistingRDD" in plans.formatted_plan(pinned)
-    graph.free_checkpoints()
-
-
 def test_directed_rows_equals_union_form(spark):
     """_directed_rows must emit exactly the rows the historical
     fwd/rev unionByName emitted (both directions, thresholded,
@@ -89,9 +76,8 @@ def test_directed_rows_equals_union_form(spark):
 def test_capped_jaccard_single_shingle_subtree(spark):
     """The capped path's result must reference ONE pinned shingle
     materialization: every consumer reads the cached relation
-    (InMemoryTableScan under the persist default; checkpoint-RDD leaf
-    under SPARK_GRAFT_PIN_MODE=checkpoint), not a re-evaluated
-    shingle subtree per reference."""
+    (InMemoryTableScan), not a re-evaluated shingle subtree per
+    reference."""
     from fink_joiner_spark import plans
 
     docs = spark.createDataFrame(

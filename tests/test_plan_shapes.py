@@ -15,14 +15,20 @@ DIRECTIONAL regression:
 Improvements (fewer shuffles, more broadcasts) pass but print a
 reminder to refresh the baseline so the gate keeps teeth.
 
-Refresh after an INTENTIONAL plan change:
+Refresh after an INTENTIONAL plan change, naming the queries/streams
+the change is meant to move (comma-separated):
 
-    SPARK_GRAFT_UPDATE_PLANS=1 python -m pytest tests/test_plan_shapes.py -q
+    SPARK_GRAFT_UPDATE_PLANS=dedup_jaccard_capped,windowed_agg \
+        python -m pytest tests/test_plan_shapes.py -q
 
-which rewrites the JSON at the conftest SF (fingerprints are taken at
-``tests/conftest.SF_DIR`` — broadcast threshold decisions depend on
-input size estimates, so baseline and check must share the SF; the
-test skips on a mismatched SF instead of flagging false regressions).
+which rewrites only those entries at the conftest SF and leaves every
+other entry byte-identical, so a refresh cannot also record unrelated
+drift; the remaining gates still run against the baseline.
+``SPARK_GRAFT_UPDATE_PLANS=all`` rewrites the whole file (bootstrap).
+Fingerprints are taken at ``tests/conftest.SF_DIR`` — broadcast
+threshold decisions depend on input size estimates, so baseline and
+check must share the SF; the test skips on a mismatched SF instead of
+flagging false regressions.
 """
 
 from __future__ import annotations
@@ -107,34 +113,62 @@ def baseline():
     return json.loads(_FP_FILE.read_text())
 
 
+_REFRESH_HINT = (
+    "If intentional, refresh just the moved entries: "
+    "SPARK_GRAFT_UPDATE_PLANS=<name>[,<name>...] "
+    "python -m pytest tests/test_plan_shapes.py"
+)
+
+
+def _refresh_names() -> set[str]:
+    """Entries SPARK_GRAFT_UPDATE_PLANS asks to rewrite: a comma list of
+    gated query/stream names, or ``all``; empty when unset."""
+    raw = os.environ.get("SPARK_GRAFT_UPDATE_PLANS", "")
+    names = {n.strip() for n in raw.split(",") if n.strip()}
+    if names == {"all"}:
+        return set(_GATED) | set(_STREAM_GATED)
+    return names
+
+
 def test_refresh_or_presence(spark, sf_dir):
-    """With SPARK_GRAFT_UPDATE_PLANS=1, (re)write the baseline; plain
-    runs just assert it exists and matches this SF."""
-    if os.environ.get("SPARK_GRAFT_UPDATE_PLANS") == "1":
-        fps = {}
-        for name in _GATED:
-            fps[name] = plans.plan_fingerprint(_build(name, spark, sf_dir))
-        sfps = {}
-        for name, builder in _STREAM_GATED.items():
-            sfps[name] = _stream_fingerprint(builder, spark, sf_dir)
-        _FP_FILE.write_text(
-            json.dumps(
-                {"sf_dir": sf_dir, "queries": fps, "streams": sfps},
-                indent=1,
-                sort_keys=True,
-            )
-            + "\n"
+    """With SPARK_GRAFT_UPDATE_PLANS set, rewrite the named baseline
+    entries (``all``: the whole file); plain runs just assert the
+    baseline exists."""
+    names = _refresh_names()
+    if names:
+        unknown = names - set(_GATED) - set(_STREAM_GATED)
+        assert not unknown, (
+            f"SPARK_GRAFT_UPDATE_PLANS names no gated entry: {sorted(unknown)}"
+            " — give query/stream names, or 'all' for a full rewrite"
         )
+        full = names == set(_GATED) | set(_STREAM_GATED)
+        if full or not _FP_FILE.exists():
+            doc = {"sf_dir": sf_dir, "queries": {}, "streams": {}}
+        else:
+            doc = json.loads(_FP_FILE.read_text())
+            assert doc.get("sf_dir") == sf_dir, (
+                f"baseline taken at {doc.get('sf_dir')}, running at {sf_dir}:"
+                " a partial refresh would mix SFs — refresh 'all' instead"
+            )
+        for name in _GATED:
+            if name in names:
+                doc["queries"][name] = plans.plan_fingerprint(
+                    _build(name, spark, sf_dir)
+                )
+        for name, builder in _STREAM_GATED.items():
+            if name in names:
+                doc["streams"][name] = _stream_fingerprint(builder, spark, sf_dir)
+        _FP_FILE.write_text(json.dumps(doc, indent=1, sort_keys=True) + "\n")
     assert _FP_FILE.exists(), (
-        "plan baseline missing: SPARK_GRAFT_UPDATE_PLANS=1 "
+        "plan baseline missing: SPARK_GRAFT_UPDATE_PLANS=all "
         "python -m pytest tests/test_plan_shapes.py"
     )
 
 
 @pytest.mark.parametrize("name", _GATED)
 def test_plan_shape_not_regressed(spark, sf_dir, baseline, name):
-    if os.environ.get("SPARK_GRAFT_UPDATE_PLANS") == "1":
-        pytest.skip("refresh run")
+    if name in _refresh_names():
+        pytest.skip("refreshed in this run")
     if baseline.get("sf_dir") != sf_dir:
         pytest.skip(
             f"baseline taken at {baseline.get('sf_dir')}, running at "
@@ -142,7 +176,10 @@ def test_plan_shape_not_regressed(spark, sf_dir, baseline, name):
         )
     want = baseline["queries"].get(name)
     if want is None:
-        pytest.fail(f"{name} gated but absent from baseline — refresh it")
+        pytest.fail(
+            f"{name} gated but absent from baseline — refresh it: "
+            f"SPARK_GRAFT_UPDATE_PLANS={name}"
+        )
     got = plans.plan_fingerprint(_build(name, spark, sf_dir))
     problems = []
     for k in _MUST_NOT_RISE:
@@ -153,9 +190,7 @@ def test_plan_shape_not_regressed(spark, sf_dir, baseline, name):
             problems.append(f"{k} fell {want[k]} -> {got[k]}")
     assert not problems, (
         f"plan shape regressed for {name}: {'; '.join(problems)}\n"
-        f"baseline={want}\nnow={got}\n"
-        "If intentional, refresh: SPARK_GRAFT_UPDATE_PLANS=1 "
-        "python -m pytest tests/test_plan_shapes.py"
+        f"baseline={want}\nnow={got}\n{_REFRESH_HINT}"
     )
     better = [
         k for k in _MUST_NOT_RISE if got[k] < want[k]
@@ -329,13 +364,16 @@ def _stream_fingerprint(builder, spark, sf_dir):
 
 @pytest.mark.parametrize("name", list(_STREAM_GATED))
 def test_stream_plan_shape_not_regressed(spark, sf_dir, baseline, name):
-    if os.environ.get("SPARK_GRAFT_UPDATE_PLANS") == "1":
-        pytest.skip("refresh run")
+    if name in _refresh_names():
+        pytest.skip("refreshed in this run")
     if baseline.get("sf_dir") != sf_dir:
         pytest.skip("baseline SF mismatch")
     want = (baseline.get("streams") or {}).get(name)
     if want is None:
-        pytest.fail(f"stream {name} gated but absent from baseline — refresh it")
+        pytest.fail(
+            f"stream {name} gated but absent from baseline — refresh it: "
+            f"SPARK_GRAFT_UPDATE_PLANS={name}"
+        )
     got = _stream_fingerprint(_STREAM_GATED[name], spark, sf_dir)
     problems = []
     for k in _STREAM_EXACT:
@@ -349,7 +387,5 @@ def test_stream_plan_shape_not_regressed(spark, sf_dir, baseline, name):
             problems.append(f"{k} fell {want[k]} -> {got[k]}")
     assert not problems, (
         f"micro-batch plan shape regressed for stream {name}: "
-        f"{'; '.join(problems)}\nbaseline={want}\nnow={got}\n"
-        "If intentional, refresh: SPARK_GRAFT_UPDATE_PLANS=1 "
-        "python -m pytest tests/test_plan_shapes.py"
+        f"{'; '.join(problems)}\nbaseline={want}\nnow={got}\n{_REFRESH_HINT}"
     )

@@ -681,7 +681,7 @@ def test_cross_corpus_dedup_candidates_are_keyed(spark, sf_dir):
     assert "LeftAnti" in plan, plan
 
 
-def test_capped_dedup_family_no_cartesian_keyed_joins(spark, sf_dir):
+def test_capped_dedup_family_no_cartesian_keyed_joins(spark, sf_dir, monkeypatch):
     """r11 posting-cap family: capped jaccard/containment and
     prefix-filtered containment must stay keyed joins (no cartesian,
     no broadcast-nested-loop) and read only (doc_id, text).
@@ -691,22 +691,27 @@ def test_capped_dedup_family_no_cartesian_keyed_joins(spark, sf_dir):
     ADVICE r13: auditing a standalone _shingle_frame would let an
     operator that widens its own pre-pin frame (or stops going through
     _shingle_frame) regress silently — so for them the pruning audit
-    runs on the EXACT frames the operators hand to _pin_once, captured
-    via the similarity._PIN_AUDIT test hook while each registered
-    query builds its plan. The PREFIX path no longer pins (r14 A/B
-    removed the never-won pin, verdict ask #4), so its scans are back
-    in the result plan and audited directly there."""
+    runs on the EXACT frames the operators hand to _pin_once, recorded
+    by a wrapper patched over similarity._pin_once while each
+    registered query builds its plan. The PREFIX path no longer pins
+    (r14 A/B removed the never-won pin, verdict ask #4), so its scans
+    are back in the result plan and audited directly there."""
     from fink_joiner_spark.operators import similarity
 
+    real_pin_once = similarity._pin_once
+    recorded: list = []
+
+    def recording_pin_once(df):
+        recorded.append(df)
+        return real_pin_once(df)
+
+    monkeypatch.setattr(similarity, "_pin_once", recording_pin_once)
     captured: dict[str, list] = {}
     for name in ("dedup_jaccard_capped", "dedup_containment_capped",
                  "dedup_containment_prefix"):
-        similarity._PIN_AUDIT = []
-        try:
-            df = _q(name, spark, sf_dir)
-            captured[name] = list(similarity._PIN_AUDIT)
-        finally:
-            similarity._PIN_AUDIT = None
+        recorded.clear()
+        df = _q(name, spark, sf_dir)
+        captured[name] = list(recorded)
         plan = plans.formatted_plan(df)
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
@@ -717,13 +722,15 @@ def test_capped_dedup_family_no_cartesian_keyed_joins(spark, sf_dir):
     from fink_joiner_spark.operators import graph
 
     graph.free_checkpoints()
-    for name, frames in captured.items():
-        if name == "dedup_containment_prefix":
-            assert not frames, (
-                f"{name} pins again — restore the _PIN_AUDIT audit"
-            )
-            continue
-        assert frames, f"{name} no longer pins any frame — update this audit"
+    # one pinned shingle frame per capped operator, none on the prefix
+    # path — a changed count means the pin placement moved and this
+    # audit needs revisiting
+    assert {name: len(frames) for name, frames in captured.items()} == {
+        "dedup_jaccard_capped": 1,
+        "dedup_containment_capped": 1,
+        "dedup_containment_prefix": 0,
+    }
+    for frames in captured.values():
         for pre_pin in frames:
             # every pinned subtree must feed a (doc_id, text)-pruned
             # parquet scan of the documents table

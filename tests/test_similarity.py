@@ -687,30 +687,6 @@ def test_jaccard_prefix_skew_guard_splits_length_spread_block(spark):
     assert fan <= 2, fan
 
 
-def test_flat_cosine_bitwise_equals_fold(spark, sf_dir):
-    """The codegen-resident flat kernel (dim unrolled) must be
-    BIT-identical to the dimension-agnostic HOF fold it replaced in
-    the hot pair stages — same strict left-fold evaluation order."""
-    emb = table(spark, sf_dir, "embeddings")
-    dim = similarity.vec_dim(emb, "embedding")
-    assert dim == 64
-    pairs = (
-        emb.alias("a")
-        .join(emb.alias("b"), F.col("a.vec_id") + 1 == F.col("b.vec_id"))
-        .select(
-            F.col("a.embedding").alias("va"), F.col("b.embedding").alias("vb")
-        )
-    )
-    diff = pairs.select(
-        (
-            similarity.cosine(F.col("va"), F.col("vb"))
-            == similarity.cosine(F.col("va"), F.col("vb"), dim)
-        ).alias("eq")
-    )
-    n_bad = diff.where(~F.col("eq")).count()
-    assert n_bad == 0
-
-
 def test_prenorm_dot_bitwise_equals_cosine(spark, sf_dir):
     """The pair-stage score — HOF dot over PRECOMPUTED per-side norms
     (norm_col/dot_col, the shape every scored join ships: one fold
